@@ -29,7 +29,10 @@ Identity contract (pinned by tests/test_fastcollect.py):
 
 This changes *how the same rows reach the driver*, never what a query
 computes: every run still evaluates the full plan from the parquet
-inputs (``toArrow`` is an action on the same physical plan).
+inputs (``toArrow`` is an action on the same physical plan).  The fetch
+runs at the session's Arrow batch size, the same batches every pandas
+UDF in the plan sees; like every engine call, ``collect()`` sets no
+session conf.
 """
 
 from __future__ import annotations
@@ -114,50 +117,44 @@ class ArrowCollectFrame(DataFrame):
                 for f in fields
             ):
                 return super().collect()
-            # the session default (512 rows/batch) is sized for audio
-            # pandas-UDF inputs; for a driver transfer it means ~94k
-            # batches on a 48M-row result — per-batch overhead dominates
-            # the fetch AND every downstream column op sees ~94k chunks.
-            # Temporarily widen the batch for this one action.
-            conf = self.sparkSession.conf
-            key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-            prev = conf.get(key)
-            conf.set(key, "1048576")
+            # the fetch uses the session's Arrow batch size (512 rows),
+            # so a large result arrives in many small chunks; combine
+            # them once here so the column pass works on a few long
+            # arrays instead of ~94k short ones (48M rows)
+            tbl = self.toArrow().combine_chunks()
+            import pyarrow.compute as pc
+
+            names = [f.name for f in fields]
+            columns = [
+                _column_values(
+                    pc.local_timestamp(col)
+                    if isinstance(f.dataType, TimestampType)
+                    else col
+                )
+                for f, col in zip(fields, tbl.columns)
+            ]
+            del tbl
+            # Row with the field names on the CLASS: instances carry no
+            # per-row __dict__ (48M rows would otherwise pay a dict alloc
+            # + setattr each).  isinstance(r, Row), repr, tuple(r),
+            # r.field, r.asDict() and __reduce__ (which rebuilds a plain
+            # Row) are all inherited unchanged — pinned by
+            # tests/test_fastcollect.py.
+            row_cls = type("Row", (Row,), {"__fields__": names})
+            make = partial(tuple.__new__, row_cls)
+            import gc
+
+            was_enabled = gc.isenabled()
+            gc.disable()
             try:
-                tbl = self.toArrow()
+                return list(map(make, zip(*columns)))
             finally:
-                conf.set(key, prev)
+                if was_enabled:
+                    gc.enable()
         except Exception:
-            # any Arrow-path surprise degrades to the stock row path
+            # any Arrow-path surprise (fetch, column pass or Row build)
+            # degrades to the stock row path
             return super().collect()
-        import pyarrow.compute as pc
-
-        names = [f.name for f in fields]
-        columns = [
-            _column_values(
-                pc.local_timestamp(col)
-                if isinstance(f.dataType, TimestampType)
-                else col
-            )
-            for f, col in zip(fields, tbl.columns)
-        ]
-        del tbl
-        # Row with the field names on the CLASS: instances carry no
-        # per-row __dict__ (48M rows would otherwise pay a dict alloc +
-        # setattr each).  isinstance(r, Row), repr, tuple(r), r.field,
-        # r.asDict() and __reduce__ (which rebuilds a plain Row) are all
-        # inherited unchanged — pinned by tests/test_fastcollect.py.
-        row_cls = type("Row", (Row,), {"__fields__": names})
-        make = partial(tuple.__new__, row_cls)
-        import gc
-
-        was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            return list(map(make, zip(*columns)))
-        finally:
-            if was_enabled:
-                gc.enable()
 
 
 def _column_values(col) -> list:

@@ -99,6 +99,12 @@ def importance_weights(
     Smoothing: add-``alpha`` over a shared feature space of size V =
     |features seen in raw or target| (or ``buckets`` when hashing), so
     features unseen in the target still get finite log-ratios.
+
+    Not lazy: the call itself runs a Spark action. It collects the
+    model scalars T_raw, T_tgt and V (filling the persisted bagged
+    corpus and count table), and the returned frame carries them as
+    literals. They are frozen at call time, so the result is only
+    consistent when ``raw`` and ``target`` are deterministic.
     """
     if alpha <= 0.0:
         raise ValueError(f"alpha must be > 0, got {alpha}")

@@ -155,8 +155,6 @@ class ResumableRun:
         """
         pts = self.ledger.pending(self.run_id, df.select(F.col(pt_col).alias("pt")))
         processed = []
-        # dynamic partition overwrite => re-running a pt replaces its slice
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         for i, pt in enumerate(pts):
             if fail_after is not None and i >= fail_after:
                 break
@@ -167,8 +165,10 @@ class ResumableRun:
             if self.audit_table is not None:
                 write_audit_iceberg(audit, self.audit_table)
             else:
+                # dynamic overwrite: re-running a pt replaces only its slice
                 (
                     audit.write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("run_id", "pt")
                     .parquet(self.audit_path)
                 )

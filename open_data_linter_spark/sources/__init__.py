@@ -1,2 +1,1 @@
-from open_data_linter_spark.sources.tpch import load_tables, TPCH_TABLES  # noqa: F401
 from open_data_linter_spark.sources.audio_files import clips_from_files  # noqa: F401

@@ -48,8 +48,12 @@ def main(argv=None) -> int:
     with open(args.spec) as f:
         spec = json.load(f)
 
-    pre_existing = SparkSession.getActiveSession() is not None
-    spark = get_spark("table-health", master=args.master)
+    # a caller-owned session is used as it is: get_spark on an existing
+    # session would rewrite its conf (app name, shuffle width)
+    spark = SparkSession.getActiveSession()
+    owned = spark is None
+    if owned:
+        spark = get_spark("table-health", master=args.master)
     t0 = time.time()
     df = spark.read.parquet(args.table)
     from pyspark.sql import functions as F
@@ -88,7 +92,7 @@ def main(argv=None) -> int:
     with open(os.path.join(args.out, "report.json"), "w") as f:
         json.dump(summary, f, indent=1, sort_keys=True)
     print(json.dumps(summary, sort_keys=True))
-    if not pre_existing:  # don't tear down a caller-owned session
+    if owned:  # don't tear down a caller-owned session
         spark.stop()
     return 2 if agg["n_skipped"] else (1 if agg["n_failed"] else 0)
 

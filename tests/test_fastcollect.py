@@ -9,12 +9,15 @@ from __future__ import annotations
 import datetime
 from decimal import Decimal
 
+import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as CDF
 
+from open_data_linter_spark import fastcollect
 from open_data_linter_spark.fastcollect import (
     ArrowCollectFrame,
     _arrow_roundtrip_safe,
+    _utc_everywhere,
     arrow_collected,
 )
 
@@ -55,9 +58,11 @@ def test_ntz_timestamp_with_nulls_identical(spark):
 
 
 def test_tz_timestamp_identical_under_utc(spark):
-    # this test environment is UTC/UTC, so the tz-timestamp gate engages
-    # and pc.local_timestamp must reproduce the pickle path's naive
-    # datetimes exactly (incl. NULLs and microseconds)
+    # with a UTC session and system tz the tz-timestamp gate engages and
+    # pc.local_timestamp must reproduce the pickle path's naive
+    # datetimes exactly (incl. NULLs and microseconds); outside UTC this
+    # test would compare the pickle path with itself, so it fails instead
+    assert _utc_everywhere(spark.conf.get("spark.sql.session.timeZone"))
     df = spark.sql(
         "SELECT * FROM VALUES"
         " (timestamp'2024-03-04 05:06:07.123456'),"
@@ -119,3 +124,31 @@ def test_row_order_preserved(spark):
     base = CDF.collect(df)
     fast = arrow_collected(df).collect()
     assert base == fast
+
+
+def test_column_pass_failure_falls_back(spark, monkeypatch):
+    import pickle
+
+    called = []
+
+    def boom(col):
+        called.append(1)
+        raise RuntimeError("column pass")
+
+    monkeypatch.setattr(fastcollect, "_column_values", boom)
+    df = spark.range(3).selectExpr("id", "concat('v', id) AS s")
+    fast = arrow_collected(df).collect()
+    assert called  # the Arrow path engaged, then degraded
+    assert pickle.dumps(fast) == pickle.dumps(CDF.collect(df))
+
+
+def test_udf_batches_keep_session_size(spark):
+    @F.pandas_udf("long")
+    def batch_len(s: pd.Series) -> pd.Series:
+        return pd.Series([len(s)] * len(s))
+
+    df = spark.range(5000, numPartitions=1).select(batch_len("id").alias("n"))
+    rows = arrow_collected(df).collect()
+    assert len(rows) == 5000
+    # the UDF sees the session's 512-row batches, not a collect-time size
+    assert max(r.n for r in rows) <= 512

@@ -60,8 +60,12 @@ def test_reprocessing_is_idempotent(spark, workdir):
     # simulate a crash AFTER audit write but BEFORE ledger mark: re-run pt=0
     part = df.where(F.col("pt") == 0)
     audit = _process(part, 0).withColumn("run_id", F.lit("rA")).withColumn("pt", F.lit(0))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    audit.write.mode("overwrite").partitionBy("run_id", "pt").parquet(f"{workdir}/audit")
+    (
+        audit.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("run_id", "pt")
+        .parquet(f"{workdir}/audit")
+    )
 
     after = sorted(map(tuple, r1.audit().drop("run_id").collect()))
     assert before == after  # dynamic overwrite replaced the slice exactly
